@@ -1,15 +1,19 @@
 """Predicate / filter operators F1–F7 (SURVEY.md §2.2).
 
 The reference threads a ``query`` object ``{service_id[], route_id,
-direction_id, shape_id}`` through every table read
-(src/lib/gtfs-to-geojson.ts:122-127,149-151,192-196). Here that is a
-small composition of ``filter`` + broadcast left-semi joins built once
-and reused — Catalyst pushes the equality predicates into the scans.
+direction_id, shape_id}`` through every table read and runs one query
+per output file (src/lib/gtfs-to-geojson.ts:122-127,149-151,192-196).
+Its equality keys only ever select trips, so here a file's query is a
+*group of trips*: the query carries a small group table and trips join
+to it, tagging each trip with the id ``g`` of every group it belongs to.
+Every trip-derived relation keeps ``g`` in its keys, so one plan serves
+every output file of a run. The service window is a broadcast
+left-semi join built once and reused.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -18,15 +22,17 @@ from pyspark.sql.functions import broadcast
 
 @dataclass
 class BaseQuery:
-    """The reference's threaded query predicate (its only IR)."""
+    """The reference's threaded query predicate (its only IR), plus the
+    run context every feature carries.
+
+    ``groups`` is the output's group table: an int ``g`` per file and the
+    trip columns that select its trips — ``route_id`` and an optional
+    ``g_dir`` (null = every direction) for route output, ``shape_id`` for
+    shape output. None is the agency output: one group, ``g = 0``."""
 
     service_ids: DataFrame | None = None  # F1 result, or None = no date filter
-    eq: dict[str, object] = field(default_factory=dict)  # F3 equality keys
-
-    def with_eq(self, **kv) -> "BaseQuery":
-        merged = dict(self.eq)
-        merged.update({k: v for k, v in kv.items() if v is not None})
-        return BaseQuery(self.service_ids, merged)
+    groups: DataFrame | None = None
+    agency_name: str | None = None  # the first agency's name (feature props)
 
 
 def service_window(calendar: DataFrame, start_date: str | None, end_date: str | None) -> DataFrame | None:
@@ -46,40 +52,41 @@ def service_window(calendar: DataFrame, start_date: str | None, end_date: str | 
     return df.select("service_id").distinct()
 
 
-def apply_query(df: DataFrame, q: BaseQuery) -> DataFrame:
-    """F2 (service semi-join) + F3 (equality keys) on any table that
-    has the relevant columns — mirrors node-gtfs applying the threaded
-    baseQuery to every read."""
-    out = df
-    for k, v in q.eq.items():
-        if k in out.columns:
-            out = out.filter(F.col(k) == F.lit(v))
-    if q.service_ids is not None and "service_id" in out.columns:
+def apply_query(trips: DataFrame, q: BaseQuery) -> DataFrame:
+    """F2 (service semi-join) + F3 (group membership) on the trips table
+    — the reference's baseQuery applied to its trip reads. Adds ``g``;
+    a trip in several groups (a route's null-direction group and one of
+    its direction groups) appears once per group."""
+    out = trips
+    if q.service_ids is not None:
         out = out.join(broadcast(q.service_ids), "service_id", "left_semi")
+    if q.groups is None:
+        return out.withColumn("g", F.lit(0))
+    keys = [c for c in q.groups.columns if c in out.columns]
+    out = out.join(broadcast(q.groups), keys)
+    if "g_dir" in q.groups.columns:
+        out = out.filter(
+            F.col("g_dir").isNull() | (F.col("direction_id") == F.col("g_dir"))
+        ).drop("g_dir")
     return out
 
 
 def used_stop_ids(stop_times: DataFrame, trips: DataFrame, q: BaseQuery) -> DataFrame:
     """F4 — "Only stops which are used in one or more routes will be
-    output" (README.md:231; CHANGELOG v3.4.0). Distinct stop_ids of
+    output" (README.md:231; CHANGELOG v3.4.0). Distinct (g, stop_id) of
     stop_times whose trips survive the query."""
-    t = apply_query(trips, q).select("trip_id", "route_id", "direction_id")
-    return (
-        stop_times.join(t.select("trip_id"), "trip_id", "left_semi")
-        .select("stop_id")
-        .distinct()
-    )
+    t = apply_query(trips, q).select("trip_id", "g")
+    return stop_times.join(t, "trip_id").select("g", "stop_id").distinct()
 
 
 def filter_used_stops(stops: DataFrame, stop_times: DataFrame, trips: DataFrame, q: BaseQuery) -> DataFrame:
     """Stops restricted to used ones (F4), keeping parent stations whose
     children are used (observed in examples/stops.geojson: parent
-    stations appear with empty routes)."""
+    stations appear with empty routes). One row per (g, stop)."""
     used = used_stop_ids(stop_times, trips, q)
-    direct = stops.join(used, "stop_id", "left_semi")
+    direct = stops.join(used, "stop_id")
     parents = stops.join(
-        direct.select(F.col("parent_station").alias("stop_id")).where(F.col("stop_id").isNotNull()).distinct(),
+        direct.select("g", F.col("parent_station").alias("stop_id")).where(F.col("stop_id").isNotNull()).distinct(),
         "stop_id",
-        "left_semi",
     ).filter(F.col("location_type") == 1)
-    return direct.unionByName(parents).dropDuplicates(["stop_id"])
+    return direct.unionByName(parents).dropDuplicates(["g", "stop_id"])

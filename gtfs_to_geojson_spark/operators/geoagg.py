@@ -23,6 +23,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -35,18 +36,19 @@ from .. import geometry as geom
 # ---------------------------------------------------------------------------
 
 
-def envelope_bounds(lines: DataFrame, coord_col: str = "coordinates") -> DataFrame:
-    """Global bbox over every coordinate of LineString rows
+def envelope_bounds(lines: DataFrame, by: list[str], coord_col: str = "coordinates") -> DataFrame:
+    """Bbox per ``by`` key over every coordinate of LineString rows
     (array<array<double>>) — explode-free: per-row array min/max first
-    (JVM-side), then one global agg. Returns 1 row
-    (min_lon, min_lat, max_lon, max_lat)."""
+    (JVM-side), then one agg. Returns (*by, min_lon, min_lat, max_lon,
+    max_lat)."""
     per_row = lines.select(
+        *by,
         F.array_min(F.transform(F.col(coord_col), lambda c: c[0])).alias("mnx"),
         F.array_max(F.transform(F.col(coord_col), lambda c: c[0])).alias("mxx"),
         F.array_min(F.transform(F.col(coord_col), lambda c: c[1])).alias("mny"),
         F.array_max(F.transform(F.col(coord_col), lambda c: c[1])).alias("mxy"),
     )
-    return per_row.agg(
+    return per_row.groupBy(*by).agg(
         F.min("mnx").alias("min_lon"),
         F.min("mny").alias("min_lat"),
         F.max("mxx").alias("max_lon"),
@@ -74,30 +76,41 @@ def bbox_polygon_col(min_lon, min_lat, max_lon, max_lat):
 
 
 def convex_hull_agg(points: DataFrame, lon_col: str = "stop_lon", lat_col: str = "stop_lat") -> list[list[float]] | None:
-    """Distributed convex hull: partial hull per Arrow batch
-    (mapInPandas — output ≤ hull of batch), final merge over the tiny
-    union of partials. Returns the closed CCW ring as plain lists, or
-    None for <3 distinct points (reference warns + emits nothing,
+    """Convex hull of every point: the closed CCW ring as plain lists,
+    or None for <3 distinct points (reference warns + emits nothing,
     formats/convex.ts:13-22)."""
+    return convex_hulls(points.withColumn("_g", F.lit(0)), "_g", lon_col, lat_col).get(0)
+
+
+def convex_hulls(
+    points: DataFrame, group_col: str, lon_col: str = "stop_lon", lat_col: str = "stop_lat"
+) -> dict:
+    """Distributed convex hull per group: partial hull per (Arrow batch,
+    group) (mapInPandas — output ≤ hull of the batch's group points),
+    final merge per group over the tiny union of partials, one read of
+    the input. Returns {group: ring or None}; groups without points are
+    absent."""
 
     def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pts = np.column_stack([pdf[lon_col].to_numpy(), pdf[lat_col].to_numpy()])
-            hull = geom.convex_hull(pts)
-            keep = pts if hull is None else hull[:-1]
-            yield pd.DataFrame({lon_col: keep[:, 0], lat_col: keep[:, 1]})
+            for g, part in pdf.groupby(group_col, sort=False):
+                pts = np.column_stack([part[lon_col].to_numpy(), part[lat_col].to_numpy()])
+                hull = geom.convex_hull(pts)
+                keep = pts if hull is None else hull[:-1]
+                yield pd.DataFrame({group_col: g, lon_col: keep[:, 0], lat_col: keep[:, 1]})
 
-    partials = points.select(lon_col, lat_col).dropna().mapInPandas(
-        partial, schema=f"{lon_col} double, {lat_col} double"
+    gtype = _spark_type_of(points, group_col)
+    partials = points.select(group_col, lon_col, lat_col).dropna().mapInPandas(
+        partial, schema=f"{group_col} {gtype}, {lon_col} double, {lat_col} double"
     )
-    rows = partials.collect()  # ≤ (hull size per partition) · partitions — tiny
-    if not rows:
-        return None
-    pts = np.asarray([[r[lon_col], r[lat_col]] for r in rows])
-    hull = geom.convex_hull(pts)
-    return None if hull is None else [[float(x), float(y)] for x, y in hull]
+    by_group: dict = {}
+    for r in partials.collect():  # ≤ (hull size per batch) · batches — tiny
+        by_group.setdefault(r[group_col], []).append((r[lon_col], r[lat_col]))
+    out = {}
+    for g, pts in by_group.items():
+        hull = geom.convex_hull(np.asarray(pts))
+        out[g] = None if hull is None else [[float(x), float(y)] for x, y in hull]
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -173,7 +186,8 @@ def dissolve_polygons(
     poly_col: str = "polygon",
     cell_res: int | None = None,
     salt_target_rows: int | None = 5000,
-) -> list[list[list[list[float]]]]:
+    group_col: str | None = None,
+):
     """Union all Polygon rows into MultiPolygon parts.
 
     Scale path (SURVEY.md A3): group rings by the grid cell of their
@@ -184,34 +198,73 @@ def dissolve_polygons(
     160-162) and fallback-to-parts on union failure (:135-146).
 
     Returns python-list MultiPolygon coordinates: list of polygons,
-    each a list of rings (outer CCW first, holes after).
+    each a list of rings (outer CCW first, holes after). With
+    ``group_col`` each group dissolves on its own (cells are keyed by
+    (group, cell), the final merge runs per group) and the result is a
+    dict from every group that has polygons to its parts.
+
+    The input is read once: it stays materialised for the call, so the
+    bbox/count aggregate, the hot-cell check and the grouped union do
+    not re-run the plan that produced it. Rings are unioned in a
+    canonical order, so the result does not depend on row order.
 
     ``salt_target_rows``: when any cell holds more polygons than this,
     that cell's union runs as salted partials first (per (cell, salt))
     before the per-cell merge — grouped-map skew handling; None
     disables. Union associativity keeps the result exact.
     """
-    n = polys.count()
-    if n == 0:
-        return []
+    g = group_col or "_g"
+    src = polys.select(F.col(g) if group_col else F.lit(0).alias(g), poly_col)
+    src = src.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        parts = _dissolve_groups(src, g, poly_col, cell_res, salt_target_rows)
+    finally:
+        src.unpersist()
+    return parts if group_col else parts.get(0, [])
 
-    # pick a cell resolution from the global bbox so one cell covers
+
+def _canonical(rings: list[np.ndarray]) -> list[np.ndarray]:
+    """Rings in an order fixed by their coordinates alone."""
+    return sorted(rings, key=lambda r: r.tobytes())
+
+
+def _union_rings(rings: list[np.ndarray]) -> list[np.ndarray]:
+    merged: list[np.ndarray] = []
+    for comp in geom.connected_components(rings):
+        part, _ok = geom.union_or_parts([rings[i] for i in comp])
+        merged.extend(part)
+    return merged
+
+
+def _dissolve_groups(src: DataFrame, g: str, poly_col: str, cell_res, salt_target_rows) -> dict:
+    ring0 = f"{poly_col}[0]"
+    stats = src.groupBy(g).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min(F.expr(f"aggregate({ring0}, cast(180.0 as double), (a, c) -> least(a, c[0]))")).alias("mnx"),
+        F.max(F.expr(f"aggregate({ring0}, cast(-180.0 as double), (a, c) -> greatest(a, c[0]))")).alias("mxx"),
+        F.min(F.expr(f"aggregate({ring0}, cast(90.0 as double), (a, c) -> least(a, c[1]))")).alias("mny"),
+        F.max(F.expr(f"aggregate({ring0}, cast(-90.0 as double), (a, c) -> greatest(a, c[1]))")).alias("mxy"),
+    ).collect()
+    if not stats:
+        return {}
+
+    # per group, pick a cell resolution from its bbox so one cell covers
     # many buffers (few groups, the final merge handles borders)
-    stats = polys.select(
-        F.min(F.expr(f"aggregate({poly_col}[0], cast(180.0 as double), (a, c) -> least(a, c[0]))")).alias("mnx"),
-        F.max(F.expr(f"aggregate({poly_col}[0], cast(-180.0 as double), (a, c) -> greatest(a, c[0]))")).alias("mxx"),
-        F.min(F.expr(f"aggregate({poly_col}[0], cast(90.0 as double), (a, c) -> least(a, c[1]))")).alias("mny"),
-        F.max(F.expr(f"aggregate({poly_col}[0], cast(-90.0 as double), (a, c) -> greatest(a, c[1]))")).alias("mxy"),
-    ).collect()[0]
-    if cell_res is None:
-        cell_res = cells.cover_res_for_bbox(
-            stats.mnx, stats.mny, stats.mxx, stats.mxy, target_cells=16
+    by_res: dict[int, list] = {}
+    for r in stats:
+        res = cell_res if cell_res is not None else cells.cover_res_for_bbox(
+            r.mnx, r.mny, r.mxx, r.mxy, target_cells=16
         )
+        by_res.setdefault(res, []).append(r[g])
 
     # centroid-of-first-ring cell assignment (JVM-side)
-    cx = F.expr(f"aggregate({poly_col}[0], cast(0.0 as double), (a, c) -> a + c[0]) / size({poly_col}[0])")
-    cy = F.expr(f"aggregate({poly_col}[0], cast(0.0 as double), (a, c) -> a + c[1]) / size({poly_col}[0])")
-    with_cell = polys.select(poly_col).withColumn("cell", cells.cell_col(cy, cx, cell_res))
+    cx = F.expr(f"aggregate({ring0}, cast(0.0 as double), (a, c) -> a + c[0]) / size({ring0})")
+    cy = F.expr(f"aggregate({ring0}, cast(0.0 as double), (a, c) -> a + c[1]) / size({ring0})")
+    (res0, _), *rest = sorted(by_res.items())
+    cell = cells.cell_col(cy, cx, res0)
+    for res, keys in rest:
+        cell = F.when(F.col(g).isin(keys), cells.cell_col(cy, cx, res)).otherwise(cell)
+    with_cell = src.withColumn("cell", cell)
 
     def _union_pdf(pdf: pd.DataFrame) -> list:
         rings: list[np.ndarray] = []
@@ -219,64 +272,60 @@ def dissolve_polygons(
             for ring in poly:
                 rings.append(np.asarray([[p[0], p[1]] for p in ring], dtype=np.float64))
         # pre-union simplify (reference v2.0.4: shrink before union)
-        rings = [geom.simplify_ring(r, 1e-7) for r in rings]
-        merged: list[np.ndarray] = []
-        for comp in geom.connected_components(rings):
-            part, _ok = geom.union_or_parts([rings[i] for i in comp])
-            merged.extend(part)
-        return [r.tolist() for r in merged]
+        rings = [geom.simplify_ring(r, 1e-7) for r in _canonical(rings)]
+        return [r.tolist() for r in _union_rings(rings)]
+
+    gtype = _spark_type_of(src, g)
+    out_schema = f"{g} {gtype}, {poly_col} array<array<array<double>>>"
 
     def union_kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame({poly_col: [_union_pdf(pdf)]})
+        return pd.DataFrame({g: [key[0]], poly_col: [_union_pdf(pdf)]})
 
     def union_kernel_keyed(key, pdf: pd.DataFrame) -> pd.DataFrame:
         # keeps the cell key for the second (per-cell) merge level
-        return pd.DataFrame({"cell": [key[0]], poly_col: [_union_pdf(pdf)]})
+        return pd.DataFrame({g: [key[0]], "cell": [key[1]], poly_col: [_union_pdf(pdf)]})
 
     # grouped-map skew (SURVEY §7 hard part 4): the union kernel is
     # superlinear in rings-per-group, so one mega-city cell dominates
     # the stage. When any cell exceeds the salt target, partial unions
     # run per (cell, salt) first — union is associative, so salted
-    # partials + per-cell merge + driver final is exact.
-    if salt_target_rows is not None:
+    # partials + per-cell merge + driver final is exact. A cell can only
+    # be hot if its group is, so the check is skipped when none is.
+    hot = False
+    if salt_target_rows is not None and any(r.n > salt_target_rows for r in stats):
+        hist = with_cell.groupBy(g, "cell").count()
+        hot = hist.filter(F.col("count") > salt_target_rows).limit(1).count() > 0
+    if hot:
         from .spatial import salted_adaptive
 
-        hist = with_cell.groupBy("cell").count()
-        hot = hist.filter(F.col("count") > salt_target_rows).limit(1).count() > 0
-        if hot:
-            salted = salted_adaptive(
-                with_cell.withColumn("_rid", F.monotonically_increasing_id()),
-                "cell",
-                id_col="_rid",
-                target_rows_per_group=salt_target_rows,
-            )
-            partials = salted.groupBy("cell", "_salt").applyInPandas(
-                union_kernel_keyed, f"cell long, {poly_col} array<array<array<double>>>"
-            )
-            cell_results = partials.groupBy("cell").applyInPandas(
-                union_kernel, f"{poly_col} array<array<array<double>>>"
-            ).collect()
-        else:
-            cell_results = with_cell.groupBy("cell").applyInPandas(
-                union_kernel, f"{poly_col} array<array<array<double>>>"
-            ).collect()
+        # salt by content, not row position, so the partials do not
+        # depend on row order either
+        salted = salted_adaptive(
+            with_cell.withColumn("_gc", F.struct(g, "cell")),
+            "_gc",
+            id_col=poly_col,
+            target_rows_per_group=salt_target_rows,
+        )
+        partials = salted.groupBy(g, "cell", "_salt").applyInPandas(
+            union_kernel_keyed, f"{g} {gtype}, cell long, {poly_col} array<array<array<double>>>"
+        )
+        cell_results = partials.groupBy(g, "cell").applyInPandas(union_kernel, out_schema).collect()
     else:
-        cell_results = with_cell.groupBy("cell").applyInPandas(
-            union_kernel, f"{poly_col} array<array<array<double>>>"
-        ).collect()
+        cell_results = with_cell.groupBy(g, "cell").applyInPandas(union_kernel, out_schema).collect()
 
-    # final merge on the driver — one entry per cell, tiny
-    all_rings = [
-        np.asarray(ring, dtype=np.float64)
-        for row in cell_results
-        for ring in row[poly_col]
-    ]
+    # final merge on the driver, per group — one entry per cell, tiny
+    rings_by_group: dict = {}
+    for row in cell_results:
+        rings_by_group.setdefault(row[g], []).extend(
+            np.asarray(ring, dtype=np.float64) for ring in row[poly_col]
+        )
+    return {key: _merge_cells(_canonical(rings)) for key, rings in rings_by_group.items()}
+
+
+def _merge_cells(all_rings: list[np.ndarray]) -> list[list[list[list[float]]]]:
     outers = [r for r in all_rings if geom.signed_area(r) >= 0]
     holes = [r for r in all_rings if geom.signed_area(r) < 0]
-    merged: list[np.ndarray] = []
-    for comp in geom.connected_components(outers):
-        part, _ok = geom.union_or_parts([outers[i] for i in comp])
-        merged.extend(part)
+    merged = _union_rings(outers)
     outs = [r for r in merged if geom.signed_area(r) >= 0] or merged
     new_holes = [r for r in merged if geom.signed_area(r) < 0] + holes
     return _group_holes(outs, new_holes)

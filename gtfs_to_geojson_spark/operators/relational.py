@@ -1,6 +1,8 @@
 """Relational joins + ordered aggregations (J1–J5, A4–A10, O1–O3).
 
 These produce the intermediate DataFrames every output format consumes.
+Every trip-derived relation carries the query's group id ``g`` in its
+keys (see filters.apply_query), so one plan covers every output file.
 All ordering-sensitive reference semantics (uniqBy first-wins, maxBy,
 stoptimes order, toposort fallback) are made explicitly deterministic —
 never dependent on Spark row order (SURVEY.md §7 hard part 2).
@@ -44,11 +46,11 @@ ROUTE_STRUCT_COLS = [
 
 
 def stop_route_links(stop_times: DataFrame, trips: DataFrame, q: BaseQuery) -> DataFrame:
-    """Distinct (stop_id, route_id) pairs under the query (the J1 core)."""
-    t = apply_query(trips, q).select("trip_id", "route_id")
+    """Distinct (g, stop_id, route_id) under the query (the J1 core)."""
+    t = apply_query(trips, q).select("g", "trip_id", "route_id")
     return (
         stop_times.join(t, "trip_id")
-        .select("stop_id", "route_id")
+        .select("g", "stop_id", "route_id")
         .distinct()
     )
 
@@ -62,16 +64,17 @@ def stops_with_routes(
 ) -> DataFrame:
     """J1 + A10 — used stops, each with a sorted array of serving-route
     structs (examples/stops.geojson: per-stop ``routes`` array; parent
-    stations carry an empty one). Route dimension is broadcast."""
+    stations carry an empty one), one row per (g, stop). Route dimension
+    is broadcast."""
     links = stop_route_links(stop_times, trips, q)
     rp = route_props(routes, None).select(*ROUTE_STRUCT_COLS)
     stop_routes = (
         links.join(broadcast(rp), "route_id")
-        .groupBy("stop_id")
+        .groupBy("g", "stop_id")
         .agg(F.sort_array(F.collect_set(F.struct(*ROUTE_STRUCT_COLS))).alias("routes"))
     )
     used = filter_used_stops(stops, stop_times, trips, q)
-    return used.join(stop_routes, "stop_id", "left").withColumn(
+    return used.join(stop_routes, ["g", "stop_id"], "left").withColumn(
         "routes", F.coalesce(F.col("routes"), F.array().cast(stop_routes.schema["routes"].dataType))
     )
 
@@ -102,11 +105,11 @@ def shape_linestrings(shapes: DataFrame) -> DataFrame:
 
 
 def route_shape_pairs(trips: DataFrame, q: BaseQuery) -> DataFrame:
-    """J2 — distinct shape→route pairs under the query (A4 DISTINCT)."""
+    """J2 — distinct (g, shape, route) under the query (A4 DISTINCT)."""
     return (
         apply_query(trips, q)
         .where(F.col("shape_id").isNotNull())
-        .select("shape_id", "route_id")
+        .select("g", "shape_id", "route_id")
         .distinct()
     )
 
@@ -118,14 +121,15 @@ def route_multilinestrings(
     route_attributes: DataFrame | None,
     q: BaseQuery,
 ) -> DataFrame:
-    """J2 + A9 — one MultiLineString per route: every shape LineString
-    of the route collected (sorted by shape_id for determinism), route
-    props + optional attributes attached (examples/lines.geojson)."""
+    """J2 + A9 — one MultiLineString per (g, route): every shape
+    LineString of the route collected (sorted by shape_id for
+    determinism), route props + optional attributes attached
+    (examples/lines.geojson)."""
     pairs = route_shape_pairs(trips, q)
     ls = shape_linestrings(shapes.join(pairs.select("shape_id").distinct(), "shape_id", "left_semi"))
     per_route = (
         ls.join(pairs, "shape_id")
-        .groupBy("route_id")
+        .groupBy("g", "route_id")
         .agg(
             F.transform(
                 F.array_sort(
@@ -153,15 +157,15 @@ def headsign_dedup(trips_proj: DataFrame) -> DataFrame:
 
 def longest_trip_per_route(stop_times: DataFrame, trips: DataFrame, q: BaseQuery) -> DataFrame:
     """A6/O3 — argmax: the trip with the most stoptimes per
-    (route_id, direction_id) (reference maxBy fallback,
+    (g, route_id, direction_id) (reference maxBy fallback,
     geojson-utils.ts:204-206); ties broken by trip_id."""
-    t = apply_query(trips, q).select("trip_id", "route_id", "direction_id")
+    t = apply_query(trips, q).select("g", "trip_id", "route_id", "direction_id")
     counts = (
         stop_times.join(t, "trip_id")
-        .groupBy("route_id", "direction_id", "trip_id")
+        .groupBy("g", "route_id", "direction_id", "trip_id")
         .agg(F.count("*").alias("n_stoptimes"))
     )
-    w = Window.partitionBy("route_id", "direction_id").orderBy(
+    w = Window.partitionBy("g", "route_id", "direction_id").orderBy(
         F.desc("n_stoptimes"), F.asc("trip_id")
     )
     return (
@@ -239,19 +243,23 @@ def stop_derived_linestrings(
     routes: DataFrame,
     route_attributes: DataFrame | None,
     q: BaseQuery,
+    skip_groups: DataFrame | None = None,
 ) -> DataFrame:
-    """Stop-derived LineString per (route_id, direction_id) for routes
+    """Stop-derived LineString per (g, route_id, direction_id) for routes
     without shapes (reference geojson-utils.ts:209-253: toposorted stop
     graph, cycle → longest trip, then position-preserving stop lookup
     J4). Grouped-map kernel per route — each group's graph is tiny, so
-    imperative logic is appropriate here and nowhere else."""
+    imperative logic is appropriate here and nowhere else. Groups in
+    ``skip_groups`` (a ``g`` column) are dropped before the kernel."""
     t = apply_query(trips, q).filter(F.col("shape_id").isNull()).select(
-        "trip_id", "route_id", "direction_id"
+        "g", "trip_id", "route_id", "direction_id"
     )
+    if skip_groups is not None:
+        t = t.join(skip_groups, "g", "left_anti")
     st = (
         stop_times.join(t, "trip_id")
         .join(stops.select("stop_id", "stop_lat", "stop_lon"), "stop_id")
-        .select("route_id", "direction_id", "trip_id", "stop_sequence", "stop_id", "stop_lat", "stop_lon")
+        .select("g", "route_id", "direction_id", "trip_id", "stop_sequence", "stop_id", "stop_lat", "stop_lon")
     )
 
     def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -262,16 +270,17 @@ def stop_derived_linestrings(
             coords[pos[sid]] = [float(lon), float(lat)]
         return pd.DataFrame(
             {
-                "route_id": [key[0]],
-                "direction_id": [key[1]],
+                "g": [key[0]],
+                "route_id": [key[1]],
+                "direction_id": [key[2]],
                 "coordinates": [coords],
             }
         )
 
     out_schema = (
-        "route_id string, direction_id int, coordinates array<array<double>>"
+        "g int, route_id string, direction_id int, coordinates array<array<double>>"
     )
-    lines = st.groupBy("route_id", "direction_id").applyInPandas(kernel, out_schema)
+    lines = st.groupBy("g", "route_id", "direction_id").applyInPandas(kernel, out_schema)
     return lines.join(broadcast(route_props(routes, route_attributes)), "route_id")
 
 

@@ -1,12 +1,16 @@
 """End-to-end run orchestration — the reference's buildGeoJSON
 (src/lib/gtfs-to-geojson.ts:115-249) re-expressed.
 
-The reference fans out pLimit(20) driver tasks per shape / per
-route+direction; here grouping is data-parallel: one features
-DataFrame is computed with the group key as a column, and the grouped
-sink writes one file per key inside its task. outputType branches:
+The reference fans out pLimit(20) driver tasks, one query per output
+file (per shape, per route+direction). Here the fan-out is a grouping
+key: the driver collects the output's group list once (the file
+names), the groups become a small table that trips join to
+(filters.BaseQuery), and one format call builds every file's features
+in one plan, each tagged with its group ``g``. The sink then writes all
+files in one ordered streaming pass (sinks.write_geojson_groups).
+outputType decides the groups:
 
-* ``agency`` — one format call, one file (ts:236-243)
+* ``agency`` — one group, one file (ts:236-243)
 * ``route``  — per (route_id, direction_id), headsign-deduped trip
   projection decides the direction set (ts:167-235)
 * ``shape``  — per distinct shape_id (ts:129-166)
@@ -14,12 +18,13 @@ sink writes one file per key inside its task. outputType branches:
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
+import re
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .. import sinks
 from ..operators import formats as fmt_mod
@@ -30,9 +35,12 @@ from .run_spec import RunSpec
 
 def build_base_query(feed, cfg: RunSpec) -> BaseQuery:
     """F1 + F2 — the reference's baseQuery construction
-    (src/lib/gtfs-to-geojson.ts:122-127)."""
+    (src/lib/gtfs-to-geojson.ts:122-127), plus the first agency's name
+    (the reference falls back to agencies[0], ts:297-308), looked up
+    once per run."""
     svc = service_window(feed["calendar"], cfg.start_date, cfg.end_date)
-    return BaseQuery(service_ids=svc)
+    row = feed["agency"].orderBy("agency_id").limit(1).collect()
+    return BaseQuery(service_ids=svc, agency_name=row[0]["agency_name"] if row else None)
 
 
 def run(spark: SparkSession, feed: dict[str, DataFrame], cfg: RunSpec) -> dict:
@@ -45,64 +53,11 @@ def run(spark: SparkSession, feed: dict[str, DataFrame], cfg: RunSpec) -> dict:
     out_dir = cfg.out_dir or "./geojson_out"
     sinks.prep_directory(out_dir, cfg.overwrite)
 
+    names, groups = _output_groups(spark, feed, q, cfg.output_type)
     files: list[dict] = []
-    cached: dict[str, DataFrame] | None = None
-    try:
-        if cfg.output_type == "agency":
-            feats = fmt(feed, cfg, q)
-            name = (_agency_key(feed) or "agency") + ".geojson"
-            files.append(sinks.write_single_geojson(feats, os.path.join(out_dir, name)))
-        elif cfg.output_type == "shape":
-            # VERDICT r2 item 3: the key-list collect and the pLimit(20)
-            # concurrent per-group jobs below re-filter the SAME feed
-            # tables up to 20× — cache them once before the fan-out so
-            # each table is scanned from source exactly once
-            # (InMemoryRelation afterwards), unpersist when done.
-            feed = cached = _persist_feed(feed)
-            # DISTINCT shape_ids (A4; reference ts:132), one file per shape.
-            # Only the KEY LIST is collected (feed cardinality); features
-            # stream task→file per group, _run_groups fans the jobs out.
-            shape_ids = [r[0] for r in relational.route_shape_pairs(feed["trips"], q).select("shape_id").distinct().collect()]
-            tasks = [
-                (f"{_safe(sid)}.geojson", q.with_eq(shape_id=sid))
-                for sid in sorted(shape_ids)
-            ]
-            files.extend(_run_groups(feed, cfg, fmt, out_dir, tasks))
-        elif cfg.output_type == "route":
-            feed = cached = _persist_feed(feed)  # see shape branch comment
-            # per route: headsign-deduped trips give the direction set
-            # (reference ts:181-196: uniqBy headsign, then per direction)
-            routes = apply_query(feed["routes"], q)
-            trips_proj = apply_query(feed["trips"], q).select(
-                "trip_id", "route_id", "direction_id", "trip_headsign"
-            )
-            dirs = (
-                relational.headsign_dedup(trips_proj)
-                .select("route_id", "direction_id")
-                .distinct()
-                .join(routes.select("route_id", "agency_id", "route_short_name"), "route_id")
-                .collect()
-            )
-            seen: dict[str, int] = {}
-            tasks = []
-            for row in sorted(dirs, key=lambda r: (str(r["route_id"]), str(r["direction_id"]))):
-                qq = q.with_eq(route_id=row["route_id"], direction_id=row["direction_id"])
-                # S7 filename: agency_id?_route_short_name?_route_id_direction
-                parts = [row["agency_id"], row["route_short_name"], row["route_id"]]
-                if row["direction_id"] is not None:
-                    parts.append(str(row["direction_id"]))
-                base = _safe("_".join(str(p) for p in parts if p is not None))
-                idx = seen.get(base)
-                seen[base] = (idx or 0) + 1
-                tasks.append((base + (f"_{idx}" if idx else "") + ".geojson", qq))
-            files.extend(_run_groups(feed, cfg, fmt, out_dir, tasks))
-        else:
-            raise ValueError(f"unknown output_type: {cfg.output_type}")
-    finally:
-        if cached is not None:
-            for df in cached.values():
-                if df is not None:
-                    df.unpersist(blocking=False)
+    if names:
+        feats = fmt(feed, cfg, dataclasses.replace(q, groups=groups))
+        files = sinks.write_geojson_groups(feats, [os.path.join(out_dir, n) for n in names])
 
     if cfg.zip_output:
         sinks.zip_outputs(out_dir, os.path.join(out_dir, "geojson.zip"))
@@ -122,78 +77,57 @@ def run(spark: SparkSession, feed: dict[str, DataFrame], cfg: RunSpec) -> dict:
     return stats
 
 
-def _persist_feed(feed: dict[str, DataFrame]) -> dict[str, DataFrame]:
-    """MEMORY_AND_DISK-cache every feed table and materialize each with
-    a cheap count() so the source scan happens exactly once, serially,
-    before the 20-thread fan-out starts (concurrent first-touch of an
-    uncomputed cache would race to build the same partitions).  Feed
-    tables are small relative to the derived joins — at cluster scale
-    this trades one bounded cache for up to 20× redundant source scans.
-    Plain persist(), not localCheckpoint: the NOTES_r2 AQE-cache hazard
-    was specific to broadcast builds over multi-GB per-round working
-    sets; feed dims are exactly the small-table case caching is for."""
-    from pyspark import StorageLevel
-
-    cached = {}
-    try:
-        for k, df in feed.items():
-            if df is None:
-                cached[k] = None
-                continue
-            cdf = df.persist(StorageLevel.MEMORY_AND_DISK)
-            cached[k] = cdf  # registered BEFORE materializing: if a later
-            cdf.count()      # count() raises, the except below unpersists
-        return cached        # every table persisted so far (no cache leak)
-    except Exception:
-        for df in cached.values():
-            if df is not None:
-                df.unpersist(blocking=False)
-        raise
-
-
-def _run_groups(feed, cfg, fmt, out_dir: str, tasks: list[tuple]) -> list[dict]:
-    """Per-group fan-out for route/shape output types.
-
-    Filenames are assigned deterministically up front (sorted key order
-    + the S7 dedup index); the per-group Spark jobs then run CONCURRENTLY
-    on a bounded thread pool — the reference's ``pLimit(20)`` driver
-    concurrency (src/lib/gtfs-to-geojson.ts:129-166,167-235) mapped onto
-    Spark's multi-threaded job submission, so the cluster pipelines many
-    small per-group jobs instead of running them serially (VERDICT r1).
-    Each group's features stream straight to its file (bounded driver
-    memory, see write_single_geojson); results return in task order so
-    stats and log.json stay deterministic.
-
-    Deliberately NOT a single grouped-map job: the aggregate formats
-    (envelope / convex / dissolved) are per-group aggregations over a
-    differently-FILTERED feed (the nested stop→routes props, the
-    stop-derived fallback, and the hull/dissolve inputs all depend on
-    the group's BaseQuery), so groups are independent queries — the
-    same structure as the reference — not partitions of one relation."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    def one(task):
-        name, qq = task
-        return sinks.write_single_geojson(
-            fmt(feed, cfg, qq), os.path.join(out_dir, name)
+def _output_groups(spark, feed, q: BaseQuery, output_type: str) -> tuple[list[str], DataFrame | None]:
+    """The file name of every group ``g`` (list index) and the group
+    table trips join to (None: the single agency group). Only the key
+    list is collected (feed cardinality)."""
+    if output_type == "agency":
+        key = q.agency_name.replace(" ", "-").lower() if q.agency_name else None
+        return [(key or "agency") + ".geojson"], None
+    types = dict(feed["trips"].dtypes)
+    if output_type == "shape":
+        # DISTINCT shape_ids (A4; reference ts:132), one file per shape
+        pairs = relational.route_shape_pairs(feed["trips"], q)
+        shape_ids = sorted(r[0] for r in pairs.select("shape_id").distinct().collect())
+        table = spark.createDataFrame(
+            list(enumerate(shape_ids)), f"g int, shape_id {types['shape_id']}"
         )
-
-    max_workers = min(20, max(1, len(tasks)))  # reference pLimit(20)
-    if len(tasks) <= 1:
-        return [one(t) for t in tasks]
-    with ThreadPoolExecutor(max_workers=max_workers) as ex:
-        return list(ex.map(one, tasks))
+        return [f"{_safe(sid)}.geojson" for sid in shape_ids], table
+    if output_type == "route":
+        # per route: headsign-deduped trips give the direction set
+        # (reference ts:181-196: uniqBy headsign, then per direction)
+        trips_proj = apply_query(feed["trips"], q).select(
+            "trip_id", "route_id", "direction_id", "trip_headsign"
+        )
+        dirs = (
+            relational.headsign_dedup(trips_proj)
+            .select("route_id", "direction_id")
+            .distinct()
+            .join(feed["routes"].select("route_id", "agency_id", "route_short_name"), "route_id")
+            .collect()
+        )
+        seen: dict[str, int] = {}
+        names, keys = [], []
+        for row in sorted(dirs, key=lambda r: (str(r["route_id"]), str(r["direction_id"]))):
+            # S7 filename: agency_id?_route_short_name?_route_id_direction
+            parts = [row["agency_id"], row["route_short_name"], row["route_id"]]
+            if row["direction_id"] is not None:
+                parts.append(str(row["direction_id"]))
+            base = _safe("_".join(str(p) for p in parts if p is not None))
+            idx = seen.get(base)
+            seen[base] = (idx or 0) + 1
+            names.append(base + (f"_{idx}" if idx else "") + ".geojson")
+            # a null direction selects every trip of the route
+            keys.append((len(keys), row["route_id"], row["direction_id"]))
+        table = spark.createDataFrame(
+            keys, f"g int, route_id {types['route_id']}, g_dir {types['direction_id']}"
+        )
+        return names, table
+    raise ValueError(f"unknown output_type: {output_type}")
 
 
 def _safe(s: str) -> str:
-    import re
-
     return re.sub(r'[\\/:*?"<>|\x00-\x1f]', "", s)
-
-
-def _agency_key(feed) -> str | None:
-    row = feed["agency"].orderBy("agency_id").limit(1).collect()
-    return row[0]["agency_name"].replace(" ", "-").lower() if row else None
 
 
 def _feed_version(feed) -> str:

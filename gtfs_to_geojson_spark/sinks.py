@@ -2,11 +2,13 @@
 
 The reference writes ``JSON.stringify(featureCollection)`` to one file
 per group — per agency, per (route, direction), or per shape
-(src/lib/gtfs-to-geojson.ts:160-162,225-228,239-243). The distributed
-equivalent of strict one-file-per-group is a grouped-map sink: each
-group's features land in one task which writes its file and returns a
-manifest row — the write itself is the parallel unit, no driver
-collect of feature payloads.
+(src/lib/gtfs-to-geojson.ts:160-162,225-228,239-243). Here every file
+of a run comes out of one grouped feature plan (each feature tagged
+with its file's group ``g``) in one ordered streaming pass: a
+range-partitioned sort by ``g`` and the in-file order, streamed to the
+driver a partition at a time, a new file started whenever ``g``
+changes. A large group can span partitions, and the driver never holds
+more than one partition of feature JSON.
 """
 
 from __future__ import annotations
@@ -15,13 +17,7 @@ import os
 import shutil
 import zipfile
 
-import pandas as pd
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
-
-from .functions.geo import filename_parts, sanitize_filename
-
-MANIFEST_SCHEMA = "filename string, n_features long, bytes long"
+from pyspark.sql import DataFrame
 
 
 def prep_directory(path: str, overwrite: bool = True) -> None:
@@ -34,75 +30,49 @@ def prep_directory(path: str, overwrite: bool = True) -> None:
     os.makedirs(path, exist_ok=True)
 
 
-def with_group_filename(df: DataFrame, part_cols: list, suffix: str = ".geojson") -> DataFrame:
-    """S7 — sanitized ``_``-joined filename with duplicate-uniquifying
-    index (reference appends an index when two routes collide after
-    sanitizing, src/lib/gtfs-to-geojson.ts:203-227)."""
-    name = sanitize_filename(filename_parts(*[F.col(c).cast("string") for c in part_cols]))
-    out = df.withColumn("_base", name)
-    w = Window.partitionBy("_base").orderBy(*[F.col(c).cast("string").asc_nulls_first() for c in part_cols])
-    dup = Window.partitionBy("_base")
-    out = out.withColumn("_n", F.count(F.lit(1)).over(dup)).withColumn(
-        "_i", F.dense_rank().over(w)
-    )
-    return out.withColumn(
-        "filename",
-        F.when(F.col("_n") > 1, F.concat(F.col("_base"), F.lit("_"), F.col("_i").cast("string")))
-        .otherwise(F.col("_base")),
-    ).withColumn("filename", F.concat(F.col("filename"), F.lit(suffix))).drop("_base", "_n", "_i")
+def write_geojson_groups(features, paths: list[str]) -> list[dict]:
+    """S6 — one ``FeatureCollection`` file per group: group ``g`` is
+    written to ``paths[g]``, every group gets its file (an empty
+    collection when it has no features, as the reference writes one
+    for a degenerate convex hull), and the manifests (filename,
+    n_features, bytes) return in group order.
 
-
-def write_geojson_grouped(features: DataFrame, out_dir: str, filename_col: str = "filename") -> pd.DataFrame:
-    """S6 — one ``FeatureCollection`` file per distinct filename.
-    Grouped-map: each group serializes + writes inside its task.
-    Returns the manifest (filename, n_features, bytes) as pandas."""
-    os.makedirs(out_dir, exist_ok=True)
-
-    def write_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        fname = key[0]
-        payload = (
-            '{"type":"FeatureCollection","features":['
-            + ",".join(pdf["feature_json"].tolist())
-            + "]}"
+    ``features`` is a lazy format's DataFrame ``(g, kind, key,
+    feature_json)``, sorted here and streamed once via
+    ``toLocalIterator``, or a driver-finished format's list of ``(g,
+    feature_json)`` already in file order."""
+    if isinstance(features, DataFrame):
+        # the range sort samples its input before shuffling it; the hash
+        # exchange in front makes both passes read shuffle files instead
+        # of running the feature plan (and its Python kernels) twice
+        ordered = (
+            features.repartition("g", "kind", "key")
+            .orderBy("g", "kind", "key", "feature_json")
+            .select("g", "feature_json")
         )
-        path = os.path.join(out_dir, fname)
+        rows = iter((r["g"], r["feature_json"]) for r in ordered.toLocalIterator())
+    else:
+        rows = iter(features)
+    manifests = []
+    pending = next(rows, None)
+    for g, path in enumerate(paths):
+        os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+        n = 0
         with open(path, "w") as f:
-            f.write(payload)
-        return pd.DataFrame(
-            {"filename": [fname], "n_features": [len(pdf)], "bytes": [len(payload)]}
+            f.write('{"type":"FeatureCollection","features":[')
+            while pending is not None and pending[0] == g:
+                if n:
+                    f.write(",")
+                f.write(pending[1])
+                n += 1
+                pending = next(rows, None)
+            f.write("]}")
+        manifests.append(
+            {"filename": os.path.basename(path), "n_features": n, "bytes": os.path.getsize(path)}
         )
-
-    manifest = (
-        features.select(filename_col, "feature_json")
-        .groupBy(filename_col)
-        .applyInPandas(write_group, MANIFEST_SCHEMA)
-    )
-    return manifest.toPandas()
-
-
-def write_single_geojson(features: DataFrame, path: str) -> dict:
-    """S6 agency-level: one file for the whole run.
-
-    Streams via ``toLocalIterator`` — the driver holds ONE partition of
-    feature JSON at a time, never the whole collection (VERDICT r1: the
-    previous ``collect()`` was an unbounded driver buffer on the
-    agency-output hot path). Byte-identical output: same row order
-    (partition order), same separators."""
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    n = 0
-    with open(path, "w") as f:
-        f.write('{"type":"FeatureCollection","features":[')
-        for r in features.select("feature_json").toLocalIterator():
-            if n:
-                f.write(",")
-            f.write(r["feature_json"])
-            n += 1
-        f.write("]}")
-    return {
-        "filename": os.path.basename(path),
-        "n_features": n,
-        "bytes": os.path.getsize(path),
-    }
+    if pending is not None:
+        raise ValueError(f"feature of group {pending[0]} is out of order or has no file")
+    return manifests
 
 
 def zip_outputs(out_dir: str, zip_path: str) -> int:

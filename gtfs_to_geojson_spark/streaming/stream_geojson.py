@@ -19,10 +19,10 @@ import os
 
 from pyspark.sql import SparkSession
 
-from ..operators.filters import BaseQuery
 from ..operators.formats import fmt_stops
+from ..plans.pipeline import build_base_query
 from ..plans.run_spec import RunSpec
-from ..sinks import write_single_geojson
+from ..sinks import write_geojson_groups
 
 
 def stream_stops(spark: SparkSession, input_dir: str, stops_schema):
@@ -48,15 +48,16 @@ def run_stream_stops_geojson(
     os.makedirs(out_dir, exist_ok=True)
     cfg = RunSpec(coordinate_precision=coordinate_precision, out_dir=out_dir)
     stream = stream_stops(spark, input_dir, feed["stops"].schema)
+    base_q = build_base_query(feed, cfg)
 
     def handle(batch_df, batch_id: int):
         if batch_df.isEmpty():
             return
         batch_feed = dict(feed)
         batch_feed["stops"] = batch_df
-        feats = fmt_stops(batch_feed, cfg, BaseQuery())
-        write_single_geojson(
-            feats, os.path.join(out_dir, f"stops_batch_{batch_id:06d}.geojson")
+        write_geojson_groups(
+            fmt_stops(batch_feed, cfg, base_q),
+            [os.path.join(out_dir, f"stops_batch_{batch_id:06d}.geojson")],
         )
 
     q = (

@@ -27,11 +27,28 @@ def test_service_window_overlap_semantics(feed):
     assert {r[0] for r in only_start.collect()} == {"SVC0"}  # only SVC0 runs into Dec 2026
 
 
-def test_apply_query_eq_and_semi(feed):
-    q = BaseQuery().with_eq(route_id="R001", direction_id=1)
-    t = apply_query(feed["trips"], q).toPandas()
+def test_apply_query_eq_and_semi(spark, feed, feed_pd):
+    groups = spark.createDataFrame([(0, "R001", 1)], "g int, route_id string, g_dir int")
+    t = apply_query(feed["trips"], BaseQuery(groups=groups)).toPandas()
     assert set(t["route_id"]) == {"R001"}
     assert set(t["direction_id"]) == {1}
+    assert set(t["g"]) == {0}
+    tp = feed_pd["trips"]
+    want = tp[(tp.route_id == "R001") & (tp.direction_id == 1)]
+    assert sorted(t["trip_id"]) == sorted(want["trip_id"])
+
+
+def test_apply_query_trip_in_several_groups(spark, feed, feed_pd):
+    """A null-direction group takes every trip of its route, so a trip
+    can belong to it and to a direction group at once."""
+    groups = spark.createDataFrame(
+        [(0, "R002", None), (1, "R002", 0)], "g int, route_id string, g_dir int"
+    )
+    t = apply_query(feed["trips"], BaseQuery(groups=groups)).toPandas()
+    tp = feed_pd["trips"]
+    r2 = tp[tp.route_id == "R002"]
+    assert sorted(t[t.g == 0]["trip_id"]) == sorted(r2["trip_id"])
+    assert sorted(t[t.g == 1]["trip_id"]) == sorted(r2[r2.direction_id == 0]["trip_id"])
 
 
 def test_used_stops_excludes_orphans(feed, feed_pd):
