@@ -1,90 +1,154 @@
-"""Checkpointed per-partition lineage — resumable batch (north rule).
+"""Resumable batch jobs: write-once stages and per-bucket lineage
+(north rule).
 
 The reference's only incremental behavior is ``skipImport`` whole-run
-reuse (src/lib/gtfs-to-geojson.ts:287). The engine generalizes it to
-partition granularity: work is bucketed by a stable key (cell bucket),
-each completed bucket appends a manifest row
-``(bucket, status, rows, ms, attempt)`` to a parquet manifest, and a
-restart anti-joins the input buckets against the manifest so only
-missing buckets recompute (SURVEY.md §4 resume/lineage).
+reuse (src/lib/gtfs-to-geojson.ts:287). The engine generalizes it at
+two granularities, both on one ``JobOutput`` — the job's ``--out``
+directory on its Hadoop FileSystem (local, ``file://``, HDFS, S3…),
+resolved once through the JVM gateway:
+
+* ``JobOutput.stage`` — a write-once parquet stage
+  (jobs/curate_corpus_job.py, curate_images_job.py, tile_pyramid_job.py);
+* ``run_bucketed_waves`` + ``LineageManifest`` — per-bucket resume for
+  one giant stage (jobs/tile_assign_job.py): each committed wave of
+  buckets appends manifest rows ``(bucket, status, rows, ms, attempt)``
+  and a restart skips every bucket with a ``done`` row.
+
+Resume model. A fresh run deletes ``--out`` first. Each stage writes its
+frame to ``<out>/<stage>`` parquet and is complete iff its ``_SUCCESS``
+marker exists — Spark commits the marker only after every task commit,
+so a killed run leaves no half-visible stage. ``--resume`` reads the
+completed stages back instead of recomputing them, so a killed run
+restarts at the stage (or wave) it died in, not from scratch. Stage row
+counts and any caller aggregates (the pyramid's ``sum(n)``) are
+``Observation``s collected by the write itself — no re-read, no second
+job; a resumed stage computes the same aggregates with one ``agg`` over
+its committed parquet. Run summaries go to ``<out>/metrics.json``.
 
 No Structured Streaming is needed — the reference is strictly batch —
-but the manifest directory is exactly the shape a
-``foreachBatch`` sink would keep, so a streaming source can reuse it.
+but the manifest directory is exactly the shape a ``foreachBatch`` sink
+would keep, so a streaming source can reuse it.
 """
 
 from __future__ import annotations
 
-import os
+import io
+import json
 import time
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST_SCHEMA = "bucket long, status string, rows long, ms double, attempt int"
 
 
+def job_session(app_name: str, shuffle_partitions: int | None = None) -> SparkSession:
+    """The jobs' session: only engine-required confs (Arrow transfer,
+    AQE with skew join) — spark-submit owns master and executors."""
+    b = (
+        SparkSession.builder.appName(app_name)
+        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+    )
+    if shuffle_partitions:
+        b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    return b.getOrCreate()
+
+
+def _write_observed(df: DataFrame, path: str, aggs: dict[str, Column], partition_by=None) -> dict:
+    """Overwrite ``path`` with ``df``; the aggregates ride the write."""
+    obs = Observation()
+    w = df.observe(obs, *[c.alias(k) for k, c in aggs.items()]).write.mode("overwrite")
+    if partition_by:
+        w = w.partitionBy(partition_by)
+    w.parquet(path)
+    return obs.get
+
+
+class JobOutput:
+    """A job's ``--out`` directory: cleared on a fresh run, kept under
+    resume; every marker check, delete and metrics write goes through
+    its one Hadoop FileSystem handle."""
+
+    def __init__(self, spark: SparkSession, out: str, resume: bool = False, label: str = "stage"):
+        self.spark, self.out, self.resume, self.label = spark, out, resume, label
+        self._Path = spark._jvm.org.apache.hadoop.fs.Path
+        self.fs = self._Path(out).getFileSystem(spark._jsc.hadoopConfiguration())
+        if not resume:
+            self.fs.delete(self._Path(out), True)
+        self.fs.mkdirs(self._Path(out))
+        self.stages: list[dict] = []
+
+    def path(self, name: str):
+        return self._Path(f"{self.out}/{name}")
+
+    def write_bytes(self, name: str, data: bytes) -> None:
+        s = self.fs.create(self.path(name), True)
+        try:
+            s.write(bytearray(data))
+        finally:
+            s.close()
+
+    def write_metrics(self, obj) -> None:
+        self.write_bytes("metrics.json", json.dumps(obj).encode())
+
+    def stage(self, name: str, build, **aggs: Column) -> tuple[DataFrame, dict]:
+        """Write-once checkpoint: ``build()`` → parquet ``<out>/<name>``,
+        skipped under resume when its ``_SUCCESS`` marker exists. Appends
+        ``{label: name, rows, sec, resumed}`` to ``self.stages`` and
+        returns the committed frame plus the ``aggs`` values."""
+        path, t0 = f"{self.out}/{name}", time.time()
+        aggs = {"rows": F.count(F.lit(1)), **aggs}
+        if self.resume and self.fs.exists(self.path(f"{name}/_SUCCESS")):
+            df = self.spark.read.parquet(path)
+            got = df.agg(*[c.alias(k) for k, c in aggs.items()]).first().asDict()
+            sec, resumed = 0.0, True
+        else:
+            built = build()
+            got = _write_observed(built, path, aggs)
+            # the known schema skips parquet schema inference (a job)
+            df = self.spark.read.schema(built.schema).parquet(path)
+            sec, resumed = round(time.time() - t0, 2), False
+        rows = got.pop("rows")
+        self.stages.append({self.label: name, "rows": rows, "sec": sec, "resumed": resumed})
+        return df, got
+
+
 class LineageManifest:
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-        os.makedirs(path, exist_ok=True)
+    """Per-bucket ``done`` rows under ``<out>/<name>``, one small parquet
+    file per committed wave."""
+
+    def __init__(self, out: JobOutput, name: str):
+        self.out, self.name = out, name
+        self.dir = f"{out.out}/{name}"
+        out.fs.mkdirs(out.path(name))
+
+    def read(self) -> DataFrame:
+        """Every committed manifest row (empty before the first wave);
+        hidden ``.tmp`` files of a killed write are never read."""
+        return self.out.spark.read.schema(MANIFEST_SCHEMA).parquet(self.dir)
 
     def completed_buckets(self) -> DataFrame:
         """Buckets already done (idempotent re-reads tolerated)."""
-        files = [f for f in os.listdir(self.path) if f.endswith(".parquet")]
-        if not files:
-            return self.spark.createDataFrame([], MANIFEST_SCHEMA).select("bucket")
-        return (
-            self.spark.read.parquet(self.path)
-            .filter(F.col("status") == "done")
-            .select("bucket")
-            .distinct()
-        )
-
-    def pending(self, work: DataFrame, bucket_col: str = "bucket") -> DataFrame:
-        """Anti-join resume: only buckets with no 'done' manifest row."""
-        done = self.completed_buckets().withColumnRenamed("bucket", bucket_col)
-        return work.join(done, bucket_col, "left_anti")
+        return self.read().filter(F.col("status") == "done").select("bucket").distinct()
 
     def mark_done(self, rows: list[tuple[int, int, float]], attempt: int = 1) -> None:
-        """Append manifest rows (bucket, n_rows, ms). Parquet append —
-        one small file per commit batch, mergeable."""
+        """Append manifest rows (bucket, n_rows, ms)."""
         pdf = pd.DataFrame(
             [(b, "done", n, ms, attempt) for b, n, ms in rows],
             columns=["bucket", "status", "rows", "ms", "attempt"],
-        )
-        fname = os.path.join(self.path, f"manifest_{int(time.time() * 1e6)}_{attempt}.parquet")
+        ).astype({"attempt": "int32"})
+        buf = io.BytesIO()
+        pdf.to_parquet(buf, index=False)
+        fname = f"manifest_{int(time.time() * 1e6)}_{attempt}.parquet"
         # write-then-rename: a kill mid-write must not leave a truncated
-        # .parquet that breaks the resume read (rename is atomic on one
-        # filesystem; the dot-prefix marks the temp file hidden so
-        # Spark's directory reader never globs a partial file)
-        tmp = os.path.join(self.path, "." + os.path.basename(fname) + ".tmp")
-        pdf.to_parquet(tmp, index=False)
-        os.rename(tmp, fname)
-
-
-def run_bucketed(
-    spark: SparkSession,
-    inputs: DataFrame,
-    bucket_col: str,
-    process_bucket,
-    manifest: LineageManifest,
-) -> tuple[int, int]:
-    """Process each pending bucket through ``process_bucket(df) → row
-    count``; returns (n_processed, n_skipped). The per-bucket kernel
-    runs as a normal Spark job over only that bucket's rows — a killed
-    run resumes with completed buckets untouched (tested in
-    tests/test_lineage.py)."""
-    all_buckets = [r[0] for r in inputs.select(bucket_col).distinct().collect()]
-    done = {r[0] for r in manifest.completed_buckets().collect()}
-    todo = sorted(b for b in all_buckets if b not in done)
-    for b in todo:
-        t0 = time.time()
-        n = process_bucket(inputs.filter(F.col(bucket_col) == F.lit(b)))
-        manifest.mark_done([(int(b), int(n), (time.time() - t0) * 1000.0)])
-    return len(todo), len(all_buckets) - len(todo)
+        # .parquet that breaks the resume read; the dot prefix hides the
+        # temp file from Spark's directory reader
+        tmp = f"{self.name}/.{fname}.tmp"
+        self.out.write_bytes(tmp, buf.getvalue())
+        self.out.fs.rename(self.out.path(tmp), self.out.path(f"{self.name}/{fname}"))
 
 
 def run_bucketed_waves(
@@ -96,13 +160,13 @@ def run_bucketed_waves(
     wave_size: int = 64,
     select_cols: list | None = None,
 ) -> tuple[int, int]:
-    """Scale variant of run_bucketed: pending buckets are processed in
-    WAVES — one partitioned write per wave_size buckets instead of one
-    driver-loop job per bucket (thousands of buckets ⇒ thousands of
-    tiny jobs is a driver bottleneck). Dynamic partition overwrite
-    means a killed wave re-runs cleanly: only its own bucket
-    directories are replaced, completed waves' manifest rows keep them
-    out of the pending set. Returns (n_buckets_processed, n_skipped).
+    """Process every pending bucket in WAVES — one partitioned write per
+    ``wave_size`` buckets, not one driver-loop job per bucket (thousands
+    of tiny jobs are a driver bottleneck). Dynamic partition overwrite
+    means a killed wave re-runs cleanly: only its own bucket directories
+    are replaced, and completed waves' manifest rows keep them out of
+    the pending set. Per-bucket row counts are observed by the wave's
+    write. Returns (n_buckets_processed, n_skipped).
     """
     all_buckets = [r[0] for r in inputs.select(bucket_col).distinct().collect()]
     done = {r[0] for r in manifest.completed_buckets().collect()}
@@ -112,27 +176,18 @@ def run_bucketed_waves(
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
         for i in range(0, len(todo), wave_size):
-            wave = todo[i : i + wave_size]
+            wave = [int(b) for b in todo[i : i + wave_size]]
             t0 = time.time()
-            df = inputs.filter(F.col(bucket_col).isin([int(b) for b in wave]))
+            df = inputs.filter(F.col(bucket_col).isin(wave))
             if select_cols:
                 df = df.select(*select_cols)
-            df.write.mode("overwrite").partitionBy(bucket_col).parquet(out_dir)
-            # manifest row counts come from the COMMITTED output, not a
-            # re-execution of the wave pipeline: the partition filter
-            # prunes to this wave's bucket dirs and only the partition
-            # column is read, so the count is parquet-footer metadata —
-            # the upstream compute (decode/join) runs exactly once
-            counts = {
-                r[0]: r[1]
-                for r in spark.read.parquet(out_dir)
-                .filter(F.col(bucket_col).isin([int(b) for b in wave]))
-                .groupBy(bucket_col)
-                .count()
-                .collect()
-            }
+            counts = _write_observed(
+                df, out_dir,
+                {f"b{j}": F.count(F.when(F.col(bucket_col) == b, 1)) for j, b in enumerate(wave)},
+                partition_by=bucket_col,
+            )
             ms = (time.time() - t0) * 1000.0 / max(1, len(wave))
-            manifest.mark_done([(int(b), int(counts.get(b, 0)), ms) for b in wave])
+            manifest.mark_done([(b, int(counts[f"b{j}"]), ms) for j, b in enumerate(wave)])
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
     return len(todo), len(all_buckets) - len(todo)

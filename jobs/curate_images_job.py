@@ -23,11 +23,9 @@ w:int, h:int, fmt:string, caption:string, phash:int64). ``bytes`` may
 be absent for metadata-only corpora; stage 1 then dedups on phash
 equality instead of the content digest.
 
-Resume model: identical to the corpus job — each stage writes its
-survivor frame to ``<out>/<stage>`` parquet and is complete iff its
-``_SUCCESS`` marker exists (Spark commits the marker only after all
-task commits, so a killed run leaves no half-visible stage);
-``--resume`` reads completed stages instead of recomputing.
+Resume: identical to the corpus job — each stage is one write-once
+stage (``<out>/<stage>`` parquet); see the "Resume model" paragraph of
+``gtfs_to_geojson_spark/streaming/lineage.py``.
 
 Scale notes (each stage inherits its operator's contract): the exact
 dedup is one groupBy on md5(bytes) — the binary column is scanned
@@ -45,26 +43,7 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
-import shutil
 import time
-
-
-def _stage(spark, out: str, name: str, resume: bool, build, metrics: list):
-    """Write-once stage checkpoint: build() → parquet(<out>/<name>),
-    skipped under --resume when the _SUCCESS marker exists."""
-    path = f"{out}/{name}"
-    t0 = time.time()
-    if resume and os.path.exists(f"{path}/_SUCCESS"):
-        df = spark.read.parquet(path)
-        metrics.append({"stage": name, "rows": df.count(), "sec": 0.0, "resumed": True})
-        return df
-    build().write.mode("overwrite").parquet(path)
-    df = spark.read.parquet(path)
-    metrics.append(
-        {"stage": name, "rows": df.count(), "sec": round(time.time() - t0, 2), "resumed": False}
-    )
-    return df
 
 
 def main():
@@ -85,26 +64,17 @@ def main():
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    b = SparkSession.builder.appName("curate-images")
-    b = b.config("spark.sql.execution.arrow.pyspark.enabled", "true")
-    b = b.config("spark.sql.adaptive.enabled", "true")
-    b = b.config("spark.sql.adaptive.skewJoin.enabled", "true")
-    if args.shuffle_partitions:
-        b = b.config("spark.sql.shuffle.partitions", str(args.shuffle_partitions))
-    spark = b.getOrCreate()
+    from gtfs_to_geojson_spark.streaming.lineage import JobOutput, job_session
+
+    spark = job_session("curate-images", args.shuffle_partitions)
 
     from pyspark.sql.functions import broadcast
 
     from gtfs_to_geojson_spark.operators import multimodal, scan
 
-    if not args.resume:
-        shutil.rmtree(args.out, ignore_errors=True)
-    os.makedirs(args.out, exist_ok=True)
-
-    metrics: list = []
+    job = JobOutput(spark, args.out, args.resume)
     t0 = time.time()
     imgs = spark.read.parquet(args.images)
     has_bytes = "bytes" in imgs.columns
@@ -120,7 +90,7 @@ def main():
         )
         return imgs.join(keep, "image_id", "left_semi")
 
-    exact = _stage(spark, args.out, "s1_exact", args.resume, s1, metrics)
+    exact, _ = job.stage("s1_exact", s1)
 
     # 2. phash near-dup clustering → keep the best-captioned member
     # per cluster (longest caption, ties to smallest id)
@@ -130,7 +100,7 @@ def main():
         ).select(F.col("canonical_id").alias("image_id"))
         return exact.join(canon, "image_id", "left_semi")
 
-    near = _stage(spark, args.out, "s2_neardup", args.resume, s2, metrics)
+    near, _ = job.stage("s2_neardup", s2)
 
     # 3. metadata quality filter — one pure-Column map stage
     def s3():
@@ -140,7 +110,7 @@ def main():
             & (F.length(F.col("caption")) >= args.min_caption_chars)
         )
 
-    clean = _stage(spark, args.out, "s3_quality", args.resume, s3, metrics)
+    clean, _ = job.stage("s3_quality", s3)
 
     # 4. eval-set decontamination (optional): drop training images
     # whose phash appears in the benchmark set — broadcast semi-join
@@ -149,7 +119,7 @@ def main():
             ev = spark.read.parquet(args.eval_phashes).select("phash").distinct()
             return clean.join(broadcast(ev), "phash", "left_anti")
 
-        clean = _stage(spark, args.out, "s4_decontam", args.resume, s4, metrics)
+        clean, _ = job.stage("s4_decontam", s4)
 
     # 5+6. aspect bucketing (codegen stamp) + batch packing (grouped
     # scan; shuffle-free under --assume-sorted). One stage: the stamp
@@ -162,22 +132,20 @@ def main():
             out = out.drop("bytes")  # the manifest references ids, not payloads
         return out
 
-    final = _stage(spark, args.out, "batches", args.resume, s6, metrics)
+    final, _ = job.stage("batches", s6)
 
     n_in = imgs.count()
     n_batches = final.select("bucket_id", "batch_id").distinct().count()
-    print(
-        json.dumps(
-            {
-                "job": "curate_images",
-                "images_in": n_in,
-                "images_out": metrics[-1]["rows"],
-                "n_batches": n_batches,
-                "stages": metrics,
-                "wall_sec": round(time.time() - t0, 2),
-            }
-        )
-    )
+    summary = {
+        "job": "curate_images",
+        "images_in": n_in,
+        "images_out": job.stages[-1]["rows"],
+        "n_batches": n_batches,
+        "stages": job.stages,
+        "wall_sec": round(time.time() - t0, 2),
+    }
+    job.write_metrics(summary)
+    print(json.dumps(summary))
 
 
 if __name__ == "__main__":

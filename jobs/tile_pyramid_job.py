@@ -19,10 +19,12 @@ Input: parquet with (lon:double, lat:double) columns (extra columns
 ignored). Output: ``<out>/z{res}`` parquet per level with
 (tile, px_x, px_y, n), plus ``<out>/tiles_z{res}`` when --render.
 
-Resume model (same contract as jobs/curate_corpus_job.py): each level
-is complete iff its ``_SUCCESS`` marker exists; ``--resume`` skips
-completed levels. A killed 12-level build restarts at the level it
-died in, not from scratch.
+Resume: each level is one write-once stage, and ``--resume`` skips
+committed levels — see the "Resume model" paragraph of
+``gtfs_to_geojson_spark/streaming/lineage.py``. A killed 12-level build
+restarts at the level it died in, not from scratch. Each level's
+``sum(n)`` is observed during its write; all levels must hold the same
+total (count conservation).
 
 Scale notes:
 * The base level is the ONLY stage proportional to the input — one
@@ -45,9 +47,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
-import shutil
-import time
 
 
 def run(spark, points_path: str, out: str, tile_res: int = 14, px_bits: int = 4,
@@ -57,63 +56,32 @@ def run(spark, points_path: str, out: str, tile_res: int = 14, px_bits: int = 4,
     from pyspark.sql import functions as F
 
     from gtfs_to_geojson_spark.operators import raster
+    from gtfs_to_geojson_spark.streaming.lineage import JobOutput
 
     if not 0 <= min_res <= tile_res:
         raise ValueError(f"need 0 <= min_res <= tile_res, got {min_res}..{tile_res}")
-    if not resume:
-        shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
-
-    metrics: list[dict] = []
-
-    def level(name: str, build):
-        path = f"{out}/{name}"
-        t0 = time.time()
-        if resume and os.path.exists(f"{path}/_SUCCESS"):
-            df = spark.read.parquet(path)
-            metrics.append({"level": name, "rows": df.count(), "sec": 0.0, "resumed": True})
-            return path
-        build().write.mode("overwrite").parquet(path)
-        df = spark.read.parquet(path)
-        metrics.append(
-            {"level": name, "rows": df.count(), "sec": round(time.time() - t0, 2),
-             "resumed": False}
-        )
-        return path
+    job = JobOutput(spark, out, resume, label="level")
 
     pts = spark.read.parquet(points_path).select("lon", "lat")
-    prev = level(f"z{tile_res}", lambda: raster.rasterize_counts(pts, tile_res, px_bits))
-    for res in range(tile_res - 1, min_res - 1, -1):
-        child_path = prev
-        prev = level(
-            f"z{res}",
-            lambda: raster.pyramid_counts(
-                spark.read.parquet(child_path), px_bits=px_bits
-            ),
-        )
+    counts, totals = {}, {}
+
+    def build(res):
+        if res == tile_res:
+            return raster.rasterize_counts(pts, tile_res, px_bits)
+        return raster.pyramid_counts(counts[res + 1], px_bits=px_bits)
+
+    for res in range(tile_res, min_res - 1, -1):
+        counts[res], got = job.stage(f"z{res}", lambda: build(res), n=F.sum("n"))
+        totals[f"z{res}"] = got["n"] or 0
 
     if render:
         for res in range(tile_res, min_res - 1, -1):
-            counts_path = f"{out}/z{res}"
-            level(
-                f"tiles_z{res}",
-                lambda: raster.density_tiles(
-                    spark.read.parquet(counts_path), px_bits=px_bits
-                ),
-            )
+            job.stage(f"tiles_z{res}", lambda: raster.density_tiles(counts[res], px_bits=px_bits))
 
-    # conservation audit across committed levels — free (footer sums)
-    totals = {
-        m["level"]: spark.read.parquet(f"{out}/{m['level']}")
-        .agg(F.sum("n")).collect()[0][0]
-        for m in metrics
-        if m["level"].startswith("z")
-    }
     if len(set(totals.values())) > 1:
         raise SystemExit(f"count conservation violated across levels: {totals}")
-    with open(f"{out}/metrics.json", "w") as f:
-        json.dump({"levels": metrics, "total_points": next(iter(totals.values()))}, f)
-    return metrics
+    job.write_metrics({"levels": job.stages, "total_points": next(iter(totals.values()))})
+    return job.stages
 
 
 def main():
@@ -128,14 +96,9 @@ def main():
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from gtfs_to_geojson_spark.streaming.lineage import job_session
 
-    b = SparkSession.builder.appName("tile-pyramid")
-    b = b.config("spark.sql.execution.arrow.pyspark.enabled", "true")
-    b = b.config("spark.sql.adaptive.enabled", "true")
-    if args.shuffle_partitions:
-        b = b.config("spark.sql.shuffle.partitions", str(args.shuffle_partitions))
-    spark = b.getOrCreate()
+    spark = job_session("tile-pyramid", args.shuffle_partitions)
     metrics = run(
         spark, args.points, args.out, args.tile_res, args.px_bits,
         args.min_res, args.render, args.resume,
