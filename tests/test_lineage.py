@@ -39,6 +39,66 @@ def _manifest(spark, root, name):
     return LineageManifest(JobOutput(spark, str(root), resume=True), name)
 
 
+@pytest.fixture()
+def work(spark):
+    pdf = pd.DataFrame({"bucket": [i % 5 for i in range(100)], "v": range(100)})
+    return spark.createDataFrame(pdf)
+
+
+def test_resume_skips_completed(spark, work, tmp_path, monkeypatch):
+    """A run killed before its third bucket's write resumes with only
+    the remaining 3 buckets, every row is processed exactly once, and a
+    second resume has nothing to do."""
+    from gtfs_to_geojson_spark.streaming import lineage
+
+    out = str(tmp_path / "out")
+    real_write = lineage._write_observed
+    processed = []
+
+    class Killed(Exception):
+        pass
+
+    def write_counting(df, path, aggs, partition_by=None):
+        got = real_write(df, path, aggs, partition_by)
+        processed.extend(got.values())
+        return got
+
+    def write_killing(df, path, aggs, partition_by=None):
+        if len(processed) >= 2:
+            raise Killed()
+        return write_counting(df, path, aggs, partition_by)
+
+    monkeypatch.setattr(lineage, "_write_observed", write_killing)
+    with pytest.raises(Killed):
+        run_bucketed_waves(spark, work, "bucket", out, _manifest(spark, tmp_path, "m"), wave_size=1)
+    assert len(processed) == 2
+    manifest = _manifest(spark, tmp_path, "m")
+    assert manifest.completed_buckets().count() == 2
+
+    # resume: only the remaining 3 buckets run
+    monkeypatch.setattr(lineage, "_write_observed", write_counting)
+    assert run_bucketed_waves(spark, work, "bucket", out, manifest, wave_size=1) == (3, 2)
+    assert len(processed) == 5
+    assert sum(processed) == 100  # every row processed exactly once
+    assert spark.read.parquet(out).select("v").distinct().count() == 100
+
+    # idempotent second resume: nothing to do
+    assert run_bucketed_waves(spark, work, "bucket", out, manifest, wave_size=1) == (0, 5)
+    assert len(processed) == 5
+
+
+def test_pending_anti_join(spark, work, tmp_path):
+    """Buckets with manifest ``done`` rows are left out of the pending
+    set: only buckets 1, 2 and 4 are written."""
+    manifest = _manifest(spark, tmp_path, "m2")
+    manifest.mark_done([(0, 20, 1.0), (3, 20, 1.0)])
+    out = str(tmp_path / "out2")
+    assert run_bucketed_waves(spark, work, "bucket", out, manifest) == (3, 2)
+    written = spark.read.parquet(out)
+    assert {r["bucket"] for r in written.select("bucket").distinct().collect()} == {1, 2, 4}
+    assert written.count() == 60
+
+
 def test_stage_observes_counts_without_extra_jobs(spark, tmp_path):
     """A fresh stage costs exactly the jobs of the plain write, and its
     observed rows/sum equal a recount; under resume ``build`` is never
